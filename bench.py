@@ -5,7 +5,9 @@ JSON line: {"metric", "value" (total sec), "unit": "sec", "queries":
 
 Set SPARK_GRAFT_QUERIES=name1,name2 to restrict; SPARK_GRAFT_CPUS=8 to
 measure at a different parallelism (scaling-efficiency evidence — see
-BENCH.md).
+BENCH.md; the default is every CPU this process may use), and
+SPARK_GRAFT_DRIVER_MEM=8g to override the driver memory (default: half
+the host RAM).
 """
 
 from __future__ import annotations
@@ -18,6 +20,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def _host_mem_gb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+
+
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
@@ -27,7 +33,12 @@ def build_spark(cpus: int):
         .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # half the host RAM: the local-mode driver JVM holds every
+        # executor, and the Python workers need the rest
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1, _host_mem_gb() // 2)}g"),
+        )
         .config("spark.sql.parquet.compression.codec", "zstd")
         # sandbox parquet is single-row-group; the fact tables at sf0.1 are
         # small enough that a repartition costs more than it buys, so the
@@ -43,12 +54,14 @@ def build_spark(cpus: int):
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))))
     only = [q for q in os.environ.get("SPARK_GRAFT_QUERIES", "").split(",") if q]
 
     import __spark_entry__ as E
     from spatial4n_spark.suite import pts_lineitem
 
+    # image rows decode with the pure JPEG decoder, as their oracles do
+    os.environ.setdefault("SPATIAL4N_JPEG_CODEC", "pure")
     spark = build_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

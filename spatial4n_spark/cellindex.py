@@ -55,24 +55,29 @@ class CellIndexBackend:
         of shifting the fine encode."""
         return self.name != "h3"
 
-    def parent_col(self, col, from_level: int, to_level: int):
-        """Column expression: a level-``from_level`` cell's ancestor at
-        ``to_level`` (the prefix property: int shift for S2, string
+    def parent_col(self, col: str, from_level: int, to_level: int):
+        """Column expression: a level-``from_level`` cell column's ancestor
+        at ``to_level`` (the prefix property: int shift for S2, string
         prefix for geohash) — coarser joins reuse ONE point encode."""
         from pyspark.sql import functions as F
 
+        return F.expr(self.parent_sql(col, from_level, to_level))
+
+    def parent_sql(self, col: str, from_level: int, to_level: int) -> str:
+        """SQL twin of ``parent_col`` — lets a caller fold many ancestor
+        levels into one expression string."""
         if to_level > from_level:
             raise ValueError("to_level must be <= from_level")
         if to_level == from_level:
-            return F.col(col) if isinstance(col, str) else col
+            return col
         if self.name == "h3":
             # hexagons cannot tile hexagons: H3 levels nest only
             # approximately (kernels/h3cell.py docstring), so there is no
             # exact ancestor — hierarchical operators use geohash or s2
             raise ValueError("h3 cells have no exact prefix hierarchy")
         if self.name == "s2":
-            return F.shiftright(col, 2 * (from_level - to_level))
-        return F.substring(col, 1, to_level)
+            return f"shiftright({col}, {2 * (from_level - to_level)})"
+        return f"substring({col}, 1, {to_level})"
 
     def parent_kernel(self, cells, from_level: int, to_level: int):
         """Driver/numpy twin of ``parent_col``."""

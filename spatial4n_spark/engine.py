@@ -162,13 +162,10 @@ class SpatialEngine:
 
         return radius_join(points, queries, **kw)
 
-    def knn(self, points: DataFrame, queries, k: int, **kw) -> DataFrame:
-        """kNN join. A driver-side query list takes the fast list path;
-        a query DataFrame takes the density-adaptive distributed path."""
-        if isinstance(queries, DataFrame):
-            from spatial4n_spark.operators.knn import knn_join_df
-
-            return knn_join_df(points, queries, k, **kw)
+    def knn(self, points, queries, k: int, **kw) -> DataFrame:
+        """Exact kNN join (``operators.knn.knn_join``): points as a
+        DataFrame or a clustered-table path, queries as a DataFrame or a
+        (query_id, lon, lat) list — one round loop serves every pairing."""
         from spatial4n_spark.operators.knn import knn_join
 
         return knn_join(points, queries, k, **kw)

@@ -1,25 +1,38 @@
-"""kNN: cell-ring candidate generation + exact-distance Window top-k.
+"""Exact kNN: circle-cover candidate generation + exact-distance Window top-k.
 
-SURVEY.md §2.9: for each query point, candidates come from its geohash
-cell plus expanding neighbor rings; exact haversine ranks them with a
-row_number window partitioned by query. Ring expansion repeats (bounded
-rounds) for queries whose k-th neighbor distance exceeds the
-guaranteed-covered radius — the correctness condition for cell-pruned
-kNN. Reference analog: the GetSubGeohashes ring expansion
-(GeohashUtils.cs:219-228) run as a relational join.
+SURVEY.md §2.9: for each query point, candidates come from the cells
+around it; exact haversine ranks them with a row_number window
+partitioned by query. Reference analog: the GetSubGeohashes ring
+expansion (GeohashUtils.cs:219-228) run as a relational join, with the
+ring generalised to a circle cover so every cell backend serves it.
 
-Two surfaces over one engine (``knn_join_df``):
-- ``knn_join_df(points, queries_df)`` — queries as a DataFrame. Ring
-  cells are enumerated by a vectorized Arrow stage (``mapInPandas``),
-  candidates come from an equi-join on the cell key (broadcast under a
-  size bound, shuffle-by-cell above it), and acceptance/retry is pure
-  DataFrame algebra (aggregate + anti-join) — nothing per-query ever
-  crosses the driver, so a 10^6-query batch holds flat driver memory.
-- ``knn_join(points, [(qid, lon, lat), ...])`` — the small-list
-  convenience wrapper; delegates to the DataFrame path.
+One round loop (``knn_join``) answers every surface; only the candidate
+source varies:
 
-The top-k window shuffle is keyed by query_id (bounded candidates x k
-rows), never by the points table.
+- **scan** — a points DataFrame, encoded once at the fine level of a
+  ``cellindex`` backend (geohash, s2 or h3). Coarser cover levels join
+  through ``parent_col``; h3 has no exact ancestors and re-encodes.
+- **clustered** — a Hilbert-clustered table (``io/clustered.py``): its
+  S2 ``cell_r`` column is the fine encode, and each round reads only the
+  files and row groups its coalesced cover ranges touch (``read_pruned``).
+
+Per query, the first radius comes from a counts pyramid over the fine
+cells: the finest pyramid cell around the query that already holds a
+few times k points sets a local density, and the radius targets ~4k
+candidates at it. Each round covers every pending query's circle in one
+batch per backend (``_circle_covers``), joins the covers to the points on
+(level, cell), takes the top k per query, and accepts a query when it
+has k candidates (the whole table, if smaller) and its k-th distance is
+within its radius (sound: the cover is a superset of the ball). The rest
+double their radius; after ``MAX_ROUNDS`` a brute-force pass finishes
+any stragglers.
+
+Each round is one Spark action: the top-k is checkpointed lazily and the
+round ends with one bounded collect. Up to ``SMALL_PENDING`` pending
+queries the loop keeps them on the driver — covers and the pending set
+are local relations, acceptance collects only the accepted ids — and
+above it everything stays distributed, so driver memory is flat in the
+query count. Ties break on ``(dist_km, id)``.
 """
 
 from __future__ import annotations
@@ -27,1022 +40,406 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from spatial4n_spark.cellindex import cell_backend
 from spatial4n_spark.functions.native import haversine_km
-from spatial4n_spark.functions.udfs import geohash_udf
-from spatial4n_spark.kernels.distance import deg_to_km
-from spatial4n_spark.kernels.geohash import (
-    geohash_cell_sizes,
-    geohash_encode_str,
-)
+from spatial4n_spark.kernels.distance import deg_to_km, km_to_deg
+
+# fine (finest cover) level per backend when the caller gives none
+DEFAULT_LEVEL = {"geohash": 6, "s2": 12, "h3": 7}
+MAX_ROUNDS = 8
+# counts-pyramid depth below the fine level
+PYRAMID_LEVELS = 5
+# a round's cover level keeps ~this many cells across the circle
+TARGET_CELLS_ACROSS = 8.0
+# cover rows (pending x TARGET_CELLS_ACROSS^2) up to which covers broadcast
+BROADCAST_CELLS = 200_000
+# pending queries up to which a round runs on driver-side local relations
+SMALL_PENDING = 64
+# coalesced id ranges per round for a clustered table's pruned read
+MAX_SCAN_RANGES = 64
+
+KM_PER_DEG = float(deg_to_km(1.0))
+R_CAP_KM = float(deg_to_km(180.0))  # a 180-degree circle covers the globe
+EARTH_KM2 = 4.0 * math.pi * (R_CAP_KM / math.pi) ** 2
+PENDING_COLS = ["query_id", "_qlon", "_qlat", "_r", "_ntot", "_lv"]
 
 
-def _rx_rings(qlat, level: int, rings: int):
-    """Per-query LONGITUDE ring count: lon cells shrink by cos(lat), so a
-    block that guarantees an isotropic covered radius needs rings/cos
-    columns (capped at a full 360-degree wrap, which the enumeration's
-    wrap+dedup turns into complete lat-band rows). The cos is taken at
-    the block's far lat edge — conservative."""
-    lat_h, lon_w = geohash_cell_sizes(level)
-    rx_cap = int(math.ceil(180.0 / lon_w))
-    edge = np.minimum(np.abs(np.asarray(qlat, dtype=np.float64)) + (rings + 1) * lat_h, 90.0)
-    cosv = np.maximum(np.cos(np.radians(edge)), 1e-9)
-    return np.minimum(np.ceil(rings / cosv), rx_cap).astype(np.int64)
+def _ladder(be, level: int) -> list[int]:
+    """Cover levels, finest first: ``level`` and each coarser level whose
+    cells are at least 4x its predecessor's (every level for geohash,
+    every other one for s2 and h3)."""
+    out = [level]
+    for lv in range(level - 1, 0, -1):
+        if be.cell_size_deg(lv) >= 4.0 * be.cell_size_deg(out[-1]):
+            out.append(lv)
+    return out
 
 
-def _ring_cells_frame(qid, qlon, qlat, level: int, rings: int):
-    """Vectorized ring-block enumeration for a batch of queries:
-    decode each center cell, offset an ANISOTROPIC (2*rx+1) x (2r+1)
-    block (rx = lon rings per ``_rx_rings``: pole-adjacent queries wrap
-    the whole lon circle instead of starving behind cos -> 0) by integer
-    cell sizes, wrap lon / drop beyond-pole rows, re-encode, dedup per
-    query. Returns a pandas frame (query_id, _qlon, _qlat, _cell)."""
-    import pandas as pd
-
-    from spatial4n_spark.kernels.geohash import geohash_decode_bbox
-
-    qid = np.asarray(qid)
-    qlon = np.asarray(qlon, dtype=np.float64)
-    qlat = np.asarray(qlat, dtype=np.float64)
-    centers = geohash_encode_str(qlat, qlon, level)
-    if rings == 0:
-        return pd.DataFrame(
-            {"query_id": qid, "_qlon": qlon, "_qlat": qlat, "_cell": centers}
-        )
-    lat_h, lon_w = geohash_cell_sizes(level)
-    mnx, mxx, mny, mxy = geohash_decode_bbox(centers)
-    cx = (np.asarray(mnx) + np.asarray(mxx)) * 0.5
-    cy = (np.asarray(mny) + np.asarray(mxy)) * 0.5
-    rx = _rx_rings(qlat, level, rings)
-
-    frames = []
-    offy = np.arange(-rings, rings + 1, dtype=np.float64) * lat_h
-    for r in np.unique(rx):
-        m = np.nonzero(rx == r)[0]
-        offx = np.arange(-r, r + 1, dtype=np.float64) * lon_w
-        ox, oy = np.meshgrid(offx, offy)
-        ox, oy = ox.ravel(), oy.ravel()
-        gx = ((cx[m][:, None] + ox[None, :] + 180.0) % 360.0) - 180.0
-        gy = cy[m][:, None] + oy[None, :]
-        ri, ci = np.nonzero((gy > -90.0) & (gy < 90.0))
-        cells = geohash_encode_str(gy[ri, ci], gx[ri, ci], level)
-        f = pd.DataFrame({"_row": m[ri], "_cell": cells}).drop_duplicates()
-        frames.append(f)
-    out = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    rows = out["_row"].to_numpy()
-    out["query_id"] = qid[rows]
-    out["_qlon"] = qlon[rows]
-    out["_qlat"] = qlat[rows]
-    return out[["query_id", "_qlon", "_qlat", "_cell"]]
+def _ragged(lo, hi):
+    """Inclusive integer ranges -> (owner index, value) pairs, flattened."""
+    n = np.maximum(hi - lo + 1, 0)
+    owner = np.repeat(np.arange(len(lo)), n)
+    start = np.repeat(np.cumsum(n) - n, n)
+    return owner, np.arange(int(n.sum()), dtype=np.int64) - start + np.repeat(lo, n)
 
 
-def _ring_cells(qlon: float, qlat: float, level: int, rings: int) -> set[str]:
-    """All cells within ``rings`` of one query's cell (batch path, n=1)."""
-    return set(
-        _ring_cells_frame(np.array(["q"]), [qlon], [qlat], level, rings)["_cell"]
-    )
+def _circle_covers(be, qx, qy, r_deg, lv: int):
+    """Level-``lv`` cells covering each geo circle — a superset of every
+    cell the circle touches. Returns ``(qidx, cells)`` pairs, unique.
 
+    s2 runs its vectorized BFS. geohash and h3 are lattices on the lon/lat
+    plane, so their cover is every cell meeting the circle's bbox: one
+    page per side of a dateline crossing, plus a page on the far seam
+    when the bbox touches it (lon +-180 is one meridian)."""
+    if be.name == "s2":
+        from spatial4n_spark.plans.s2cover import s2_circle_covers_batch
 
-def _covered_radius_km(qlat: float, level: int, rings: int) -> float:
-    """Conservative radius fully covered by the anisotropic ring block:
-    at least ``rings`` cells of latitude; in longitude ``rx`` cells whose
-    km width carries the cos(lat) shrink — when the block wraps the full
-    circle the rows are complete lat bands and only the lat term binds
-    (this is what lets pole-adjacent queries accept instead of falling
-    through to brute force)."""
-    lat_h, lon_w = geohash_cell_sizes(level)
-    rx = int(_rx_rings([qlat], level, rings)[0])
-    lat_km = float(deg_to_km(rings * lat_h))
-    if (2 * rx + 1) * lon_w >= 360.0:
-        return max(lat_km, 0.0)
-    lon_km = float(deg_to_km(rx * lon_w)) * max(
-        math.cos(math.radians(abs(qlat) + rings * lat_h)), 0.0
-    )
-    return max(min(lat_km, lon_km), 0.0)
+        return s2_circle_covers_batch(qx, qy, r_deg, lv)
+    from spatial4n_spark.kernels.circle import circle_bbox
 
+    x0, x1, y0, y1 = circle_bbox(qx, qy, r_deg)
+    x1 = np.where(x0 > x1, x1 + 360.0, x1)
+    east, west = x1 >= 180.0, x0 <= -180.0
+    qi = np.arange(len(x0))
+    page = np.concatenate([qi, qi[east], qi[west]])
+    px0 = np.concatenate([x0, np.full(east.sum(), -180.0), np.full(west.sum(), 180.0)])
+    px1 = np.concatenate([np.minimum(x1, 180.0), x1[east] - 360.0, np.full(west.sum(), 180.0)])
+    py0, py1 = y0[page], y1[page]
+    if be.name == "geohash":
+        from spatial4n_spark.kernels.geohash import geohash_cell_sizes, geohash_encode_str
 
-def _covered_radius_expr(qlat_col, rings_col, level: int):
-    """Per-row column twin of ``_covered_radius_km`` with a rings COLUMN.
-    Uses rx-1 in the lon term: the enumeration computes rx in numpy, this
-    expression in the JVM — the one-cell slack absorbs any ulp-level
-    ceil() disagreement so acceptance can never assume a column the
-    block did not enumerate."""
-    lat_h, lon_w = geohash_cell_sizes(level)
-    rx_cap = int(math.ceil(180.0 / lon_w))
-    edge = F.least(
-        F.abs(qlat_col) + (rings_col + 1) * F.lit(float(lat_h)), F.lit(90.0)
-    )
-    cosv = F.greatest(F.cos(F.radians(edge)), F.lit(1e-9))
-    rx_raw = F.ceil(rings_col / cosv).cast("double")  # UNcapped ceil
-    rx = F.least(rx_raw, F.lit(float(rx_cap)))
-    rx_c = F.greatest(rx - 1, F.lit(0.0))
-    lat_km = rings_col * F.lit(float(deg_to_km(lat_h)))
-    # full wrap: claimed either when even the slack-reduced rx spans the
-    # circle, or when the UNcapped ceil exceeds the cap BY MORE THAN ONE
-    # cell (rx_raw - 1 >= cap). The second clause carries the same
-    # one-cell slack as everywhere else: if the JVM's rings/cos cleared
-    # the cap by a whole cell, numpy's ceil — at most one off — still hit
-    # the cap and enumerated the full (2*cap+1)-column wrap
-    # ((2*cap+1)*lon_w >= 360 by construction of cap = ceil(180/lon_w)).
-    # A pole query exactly AT the cap boundary defers the wrap claim by
-    # one ring doubling instead of risking a one-column acceptance gap;
-    # the clause must compare the UNcapped ceil — the capped rx can never
-    # exceed cap, so a capped comparison would never fire and would
-    # strand pole queries at a near-zero acceptance radius forever.
-    full_wrap = ((2 * rx_c + 1) * F.lit(float(lon_w)) >= F.lit(360.0)) | (
-        rx_raw - 1 >= F.lit(float(rx_cap))
-    )
-    lon_km = (
-        rx_c
-        * F.lit(float(deg_to_km(lon_w)))
-        * F.greatest(
-            F.cos(F.radians(F.abs(qlat_col) + rings_col * F.lit(float(lat_h)))),
-            F.lit(0.0),
-        )
-    )
-    return F.when(full_wrap, F.greatest(lat_km, F.lit(0.0))).otherwise(
-        F.greatest(F.least(lat_km, lon_km), F.lit(0.0))
-    )
-
-
-def _est_cells_expr(levels: list[int]):
-    """Per-row enumerated-cell estimate over ``_qlat``/``_rings``/``_level``
-    columns, ANISOTROPIC: the lon ring count rx grows as rings/cos(lat)
-    (capped at a full wrap), so a pole-adjacent batch counts
-    (2*rx+1)*(2*rings+1), not (2*rings+1)^2 — the isotropic square
-    under-counts by orders of magnitude exactly where blocks are widest,
-    and the broadcast decision in ``knn_join_df`` trusts this number."""
-    e = F.lit(0.0)
-    for lv in levels:
         lat_h, lon_w = geohash_cell_sizes(lv)
-        rx_cap = int(math.ceil(180.0 / lon_w))
-        edge = F.least(
-            F.abs(F.col("_qlat")) + (F.col("_rings") + 1) * F.lit(float(lat_h)),
-            F.lit(90.0),
+        nrows, ncols = round(180.0 / lat_h), round(360.0 / lon_w)
+        pr, i = _ragged(
+            np.floor((py0 + 90.0) / lat_h).astype(np.int64),
+            np.minimum(np.floor((py1 + 90.0) / lat_h), nrows - 1).astype(np.int64),
         )
-        cosv = F.greatest(F.cos(F.radians(edge)), F.lit(1e-9))
-        rx = F.least(F.ceil(F.col("_rings") / cosv), F.lit(rx_cap))
-        e = F.when(
-            F.col("_level") == lv,
-            (2 * rx + 1).cast("double") * (2 * F.col("_rings") + 1),
-        ).otherwise(e)
-    return e
-
-
-def knn_join_df(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    lon: str = "lon",
-    lat: str = "lat",
-    id_col: str = "image_id",
-    query_id: str = "query_id",
-    qlon: str = "qlon",
-    qlat: str = "qlat",
-    level: int | None = None,
-    max_level: int = 6,
-    max_rounds: int = 4,
-    estimated_total: int | None = None,
-    broadcast_cells: int = 200_000,
-    cell_cap: int | None = None,
-    max_rings0: int = 16,
-    debug: bool = False,
-) -> DataFrame:
-    """Exact kNN join, queries as a DataFrame. Returns
-    (query_id, <id_col>, dist_km, rank); ties break on <id_col>.
-
-    Density-adaptive against the clustered-data trap: with one global
-    grid level, hot-cluster queries x hot cells multiply into
-    |Q_hot| x |N_hot| candidate rows (a Paris-cell query set re-scans
-    the whole Paris cell per query), while the same level starves
-    ocean queries into round after round of ring doubling. No single
-    level serves both, so each query gets its OWN level:
-
-    - points are encoded ONCE at ``max_level``; a per-cell count
-      aggregate plus its prefix roll-ups form a counts pyramid (coarser
-      geohash cells are string prefixes — no re-encode);
-    - each query picks the FINEST level at which its own cell already
-      holds ~4k points (its candidate budget), falling back to the
-      coarsest level with a density-presized ring count — dense-cluster
-      queries search tiny cells, sparse queries search big ones, and
-      both start with candidates O(k);
-    - ``level=<int>`` pins a single level for every query (the fixed
-      grid mode the list path uses).
-
-    Per round: a ``mapInPandas`` stage expands pending queries into ring
-    cells; candidates come from one prefix-keyed equi-join per ACTIVE
-    level (<= 5, against the same cached encode — broadcast under a size
-    bound, else shuffle-by-cell with AQE skew handling); a
-    query-partitioned window takes top-k; acceptance (k-th distance
-    within the covered radius of the query's level+rings) is an
-    aggregate + join; survivors double their rings. Nothing per-query
-    touches the driver.
-    """
-    spark = points.sparkSession
-    qid_type = queries.schema[query_id].dataType.simpleString()
-    id_type = points.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {qid_type}, {id_col} {id_type}, dist_km double, rank int"
-    cells_schema = (
-        f"query_id {qid_type}, _qlon double, _qlat double, "
-        "_level int, _rings int, _cell string"
-    )
-
-    lmin = 2
-    enc_level = max(max_level, level or 0)
-    levels = [level] if level is not None else list(range(lmin, max_level + 1))
-    # two thresholds: a query picks the finest level whose own cell holds
-    # ~2k points (enough that one ring usually suffices — a bigger bar
-    # here pushes queries a whole level coarser, 10-30x more candidates);
-    # rings are then presized to a ~4k-candidate budget at that level
-    thr_sel = max(4, 2 * k) if cell_cap is None else cell_cap
-    thr = max(32, 4 * k) if cell_cap is None else cell_cap
-
-    import sys
-    import time as _time
-
-    def _dbg(msg: str, t0: float | None = None):
-        if debug:
-            dt = f" [{_time.time() - t0:.1f}s]" if t0 is not None else ""
-            print(f"knn_join_df: {msg}{dt}", file=sys.stderr)
-
-    _t = _time.time()
-    ptsF = points.withColumn("_cellF", geohash_udf(enc_level)(F.col(lat), F.col(lon)))
-    ptsF = ptsF.select(id_col, lon, lat, "_cellF").persist()
-
-    # one count pass at the finest level; the pyramid levels aggregate
-    # the (small) counts table, never the points
-    cnt = ptsF.groupBy("_cellF").agg(F.count(F.lit(1)).alias("_n")).persist()
-    n_total = estimated_total if estimated_total is not None else int(
-        cnt.agg(F.sum("_n")).first()[0] or 0
-    )
-
-    # queries encoded once at enc_level; per-level cells are prefixes
-    q0 = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(qlon).cast("double").alias("_qlon"),
-        F.col(qlat).cast("double").alias("_qlat"),
-    )
-    q0 = q0.withColumn("_qcellF", geohash_udf(enc_level)(F.col("_qlat"), F.col("_qlon")))
-    if len(levels) == 1:
-        lv = levels[0]
-        counts_lv = cnt.groupBy(F.substring("_cellF", 1, lv).alias("_pc")).agg(
-            F.sum("_n").alias(f"_n{lv}")
+        rc, j = _ragged(
+            np.floor((px0[pr] + 180.0) / lon_w).astype(np.int64),
+            np.minimum(np.floor((px1[pr] + 180.0) / lon_w), ncols - 1).astype(np.int64),
         )
-        q0 = q0.withColumn("_pc", F.substring("_qcellF", 1, lv)).join(
-            counts_lv, "_pc", "left"
-        ).drop("_pc")
+        cells = geohash_encode_str(
+            -90.0 + (i[rc] + 0.5) * lat_h, -180.0 + (j + 0.5) * lon_w, lv
+        )
     else:
-        # the whole pyramid in ONE aggregation (explode each fine cell
-        # into its per-level prefixes) and ONE query-side join on the
-        # exploded (level, prefix) keys, pivoted back per query — vs a
-        # join per level, which costs a broadcast build (a whole Spark
-        # job) per level and dominates small-batch latency
-        pyr = (
-            cnt.select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(lv).alias("_plv"),
-                                F.substring("_cellF", 1, lv).alias("_pc"),
-                            )
-                            for lv in levels
-                        ]
-                    )
-                ).alias("_k"),
-                "_n",
-            )
-            .groupBy("_k._plv", "_k._pc")
-            .agg(F.sum("_n").alias("_pn"))
+        from spatial4n_spark.kernels.h3cell import SQRT3, SQRT3_2, h3_from_qr, hex_size
+
+        # same row/column bounds (with one of slack) as plans/h3cover.py
+        s = hex_size(lv)
+        hw = SQRT3_2 * s
+        pr, r = _ragged(
+            np.floor((py0 - s) / (1.5 * s)).astype(np.int64) - 1,
+            np.ceil((py1 + s) / (1.5 * s)).astype(np.int64) + 1,
         )
-        keys = q0.select(
-            "query_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(lv).alias("_plv"),
-                            F.substring("_qcellF", 1, lv).alias("_pc"),
-                        )
-                        for lv in levels
-                    ]
-                )
-            ).alias("_k"),
-        ).select("query_id", "_k._plv", "_k._pc")
-        hits = (
-            keys.join(pyr, ["_plv", "_pc"], "left")
-            .groupBy("query_id")
-            .agg(
-                *[
-                    F.max(F.when(F.col("_plv") == lv, F.col("_pn"))).alias(
-                        f"_n{lv}"
-                    )
-                    for lv in levels
-                ]
-            )
+        rc, q = _ragged(
+            np.floor(((px0[pr] - hw) / s - SQRT3_2 * r) / SQRT3).astype(np.int64) - 1,
+            np.ceil(((px1[pr] + hw) / s - SQRT3_2 * r) / SQRT3).astype(np.int64) + 1,
         )
-        q0 = q0.join(hits, "query_id", "left")
+        cells = h3_from_qr(q, r[rc], lv)
+    out = pd.DataFrame({"q": page[pr[rc]], "c": cells}).drop_duplicates()
+    return out["q"].to_numpy(), out["c"].to_numpy()
 
-    # finest level whose own cell already holds ~thr candidates; else the
-    # coarsest level (density-presized rings below)
-    lvl_expr = F.lit(levels[0])
-    for lv in levels[1:]:
-        lvl_expr = F.when(
-            F.coalesce(F.col(f"_n{lv}"), F.lit(0)) >= thr_sel, F.lit(lv)
-        ).otherwise(lvl_expr)
-    q0 = q0.withColumn("_level", lvl_expr)
-    nlevel = F.lit(None).cast("long")
-    for lv in levels:
-        nlevel = F.when(F.col("_level") == lv, F.col(f"_n{lv}")).otherwise(nlevel)
-    # rings for ~thr candidates at the chosen level's local density
-    local_rings = F.ceil(
-        (
-            F.sqrt(
-                F.lit(float(thr)) / F.greatest(F.coalesce(nlevel, F.lit(1)), F.lit(1)).cast("double")
-            )
-            - 1
+
+def _cover_frame(be, pdf: pd.DataFrame) -> pd.DataFrame:
+    """Pending queries -> cover rows (_pcell + the pending columns), one
+    batch cover per distinct cover level ``_lv``."""
+    frames = []
+    for lv in np.unique(pdf["_lv"].to_numpy()):
+        sub = pdf[pdf["_lv"].to_numpy() == lv].reset_index(drop=True)
+        # a 1e-9 relative margin keeps boundary-distance points inside
+        r_deg = km_to_deg(sub["_r"].to_numpy(dtype=np.float64)) * (1.0 + 1e-9)
+        qi, cells = _circle_covers(
+            be, sub["_qlon"].to_numpy(dtype=np.float64),
+            sub["_qlat"].to_numpy(dtype=np.float64), r_deg, int(lv),
         )
-        / 2
-    ).cast("int")
-    # lazy checkpoint: the _pending_stats collect right below materializes
-    # it — an eager one would spend a whole extra Spark job on the same
-    # plan (job count, not data volume, dominates small-batch latency)
-    _dbg("plans built", _t)
-    _t = _time.time()
-    pending = (
-        q0.withColumn(
-            "_rings",
-            F.greatest(F.lit(1), F.least(F.lit(int(max_rings0)), local_rings)),
-        )
-        .select("query_id", "_qlon", "_qlat", "_level", "_rings")
-        .localCheckpoint(eager=False)
-    )
-    _dbg("pending checkpoint declared", _t)
+        f = sub.iloc[qi].reset_index(drop=True)
+        f.insert(0, "_pcell", cells)
+        frames.append(f)
+    if not frames:
+        return pdf.iloc[:0].assign(_pcell=[])[["_pcell"] + PENDING_COLS]
+    return pd.concat(frames, ignore_index=True)[["_pcell"] + PENDING_COLS]
 
-    def _pending_stats(pdf: DataFrame):
-        rows = pdf.groupBy("_level").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_est_cells_expr(levels)).alias("cells"),
-        ).collect()
-        n = sum(int(r["n"]) for r in rows)
-        cells = sum(int(r["cells"] or 0) for r in rows)
-        act = sorted(int(r["_level"]) for r in rows)
-        return n, cells, act
 
-    _t = _time.time()
-    n_pending, est_cells, active_levels = _pending_stats(pending)
-    _dbg(f"setup done: pending={n_pending} est_cells={est_cells} levels={active_levels}", _t)
+class _Scan:
+    """Candidate source: a points DataFrame, encoded once at ``level``
+    (h3 skips the fine encode: its cover levels re-encode)."""
 
-    accepted: list[DataFrame] = []
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_km").asc(), F.col(id_col).asc()
-    )
+    def __init__(self, points: DataFrame, index: str, level: int, id_col, lon, lat):
+        self.be, self.level, self.cell = cell_backend(index), level, "_cellF"
+        cols = [id_col, lon, lat]
+        if self.be.has_hierarchy:
+            cols.append(self.be.udf(level)(F.col(lat), F.col(lon)).alias("_cellF"))
+        self.rows = points.select(*cols).persist()
 
-    def cells_gen():
-        def gen(it):
-            import pandas as pd
+    def round_rows(self, covers, cover_pdf):
+        return self.rows, covers
 
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                frames = []
-                lv_arr = pdf["_level"].to_numpy()
-                rings_arr = pdf["_rings"].to_numpy()
-                for lv in np.unique(lv_arr):
-                    for r in np.unique(rings_arr[lv_arr == lv]):
-                        m = (lv_arr == lv) & (rings_arr == r)
-                        f = _ring_cells_frame(
-                            pdf["query_id"].to_numpy()[m],
-                            pdf["_qlon"].to_numpy()[m],
-                            pdf["_qlat"].to_numpy()[m],
-                            int(lv),
-                            int(r),
-                        )
-                        f["_level"] = int(lv)
-                        f["_rings"] = int(r)
-                        frames.append(f)
-                out = pd.concat(frames, ignore_index=True)
-                yield out[["query_id", "_qlon", "_qlat", "_level", "_rings", "_cell"]]
+    def close(self):
+        self.rows.unpersist()
 
-        return gen
 
-    def radius_expr():
-        e = F.lit(0.0)
-        for lv in levels:
-            e = F.when(
-                F.col("_level") == lv,
-                _covered_radius_expr(F.col("_qlat"), F.col("_rings"), lv),
-            ).otherwise(e)
-        return e
+class _Clustered:
+    """Candidate source: a clustered table. Its S2 ``cell_r`` is the fine
+    encode; each round reads only the files and row groups its cover
+    ranges touch."""
 
-    for _ in range(max_rounds):
-        if n_pending == 0:
-            break
-        cells = pending.mapInPandas(cells_gen(), cells_schema)
-        if len(active_levels) > 1 and n_pending > 10_000:
-            # the per-level join branches below each re-read this plan;
-            # Spark does not dedupe common subplans across unionAll
-            # branches, so without materialization the Python ring
-            # enumeration of ALL pending queries would re-run once per
-            # active level.  For small pending sets the re-enumeration
-            # (O(n_pending x levels) numpy work) is far cheaper than the
-            # extra Spark job an eager checkpoint costs.
-            cells = cells.localCheckpoint(eager=True)
-        # one prefix-keyed join per ACTIVE level against the same cached
-        # encode; at scale each is the standard shuffle-by-cell plan (AQE
-        # skew-joins the residual hot cells), and the points side never
-        # broadcasts
-        cand = None
-        for lv in active_levels:
-            rhs = cells.where(F.col("_level") == lv)
-            if est_cells <= broadcast_cells:
-                rhs = F.broadcast(rhs)
-            c = ptsF.withColumn("_cell", F.substring("_cellF", 1, lv)).join(rhs, "_cell")
-            cand = c if cand is None else cand.unionAll(c)
-        ranked = (
-            cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        # lazy checkpoint of the bounded top-k (<= |pending| * k rows):
-        # the next-pending stats collect below materializes the whole
-        # round — ranked, acceptance, anti-join — as ONE Spark job while
-        # the ptsF/cnt caches are still alive; acceptance and the final
-        # union then read the materialized checkpoint
-        _t = _time.time()
-        ranked = ranked.localCheckpoint(eager=False)
-        _dbg(f"round ranked planned: pending={n_pending} est_cells={est_cells}", _t)
-        summ = ranked.groupBy("query_id").agg(
-            F.count(F.lit(1)).alias("_n"), F.max("dist_km").alias("_dmax")
-        )
-        accepted_ids = (
-            summ.join(
-                pending.select("query_id", "_qlat", "_level", "_rings"), "query_id"
-            )
-            .where((F.col("_n") >= k) & (F.col("_dmax") <= radius_expr()))
-            .select("query_id")
-        )
-        accepted.append(
-            ranked.join(F.broadcast(accepted_ids), "query_id").select(
-                "query_id", id_col, "dist_km", "rank"
-            )
-        )
-        _t = _time.time()
-        pending = (
-            pending.join(F.broadcast(accepted_ids), "query_id", "left_anti")
-            .withColumn(
-                "_rings", F.least(F.col("_rings") * 2, F.lit(int(max_rings0 * 16)))
-            )
-            .localCheckpoint(eager=False)
-        )
-        n_pending, est_cells, active_levels = _pending_stats(pending)
-        _dbg(f"round job (ranked+accept+stats): next pending={n_pending}", _t)
+    def __init__(self, spark: SparkSession, path: str):
+        from spatial4n_spark.io import clustered as C
 
-    if n_pending:
-        # final fallback: exact brute force for the stragglers (pole/sparse
-        # regions). Broadcast whichever side is smaller: a sparse points
-        # table (the usual reason ring pruning failed) broadcasts against
-        # a large query set; a small straggler set broadcasts against a
-        # dense table — either way the shuffle is keyed by query_id only.
-        p = points.select(id_col, lon, lat)
-        if n_total <= n_pending:
-            fb_cand = pending.crossJoin(F.broadcast(p))
+        self.C, self.spark, self.path = C, spark, path
+        self.be, self.cell = cell_backend("s2"), C.CELL_COL
+        self.level = int(C.load_manifest(path)["level"])
+        self.rows = C._read_listed(spark, path)
+
+    def round_rows(self, covers, cover_pdf):
+        level = self.level
+
+        def cell_ranges(pdf: pd.DataFrame):
+            from spatial4n_spark.io.clustered import _coalesce_ranges_np
+
+            shift = 2 * (level - pdf["_lv"].to_numpy(dtype=np.int64))
+            c = pdf["_pcell"].to_numpy(dtype=np.int64)
+            return _coalesce_ranges_np(c << shift, ((c + 1) << shift) - 1, MAX_SCAN_RANGES)
+
+        if cover_pdf is not None:
+            ranges = cell_ranges(cover_pdf)
         else:
-            fb_cand = p.crossJoin(F.broadcast(pending))
-        fb = (
-            fb_cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        _t = _time.time()
-        accepted.append(fb.localCheckpoint(eager=True))
-        _dbg(f"fallback brute force: stragglers={n_pending}", _t)
+            # partial merges per partition; the driver merges <= MAX_SCAN_RANGES
+            # rows per partition, never the distinct cell set
+            def merge(it):
+                frames = [p for p in it if len(p)]
+                if frames:
+                    yield pd.DataFrame(cell_ranges(pd.concat(frames)), columns=["lo", "hi"])
 
-    ptsF.unpersist()
-    cnt.unpersist()
-    if not accepted:
-        return spark.createDataFrame([], out_schema)
-    out = accepted[0]
-    for df in accepted[1:]:
-        out = out.unionAll(df)
-    return out
+            covers = covers.localCheckpoint(eager=False)
+            parts = covers.select("_lv", "_pcell").distinct().mapInPandas(merge, "lo long, hi long")
+            ranges = self.C._coalesce_ranges(map(tuple, parts.collect()), MAX_SCAN_RANGES)
+        return self.C.read_pruned(self.spark, self.path, ranges)[0], covers
+
+    def close(self):
+        pass
 
 
-def _initial_cover_radius_km(n_total: int, k: int) -> tuple[float, float]:
-    """(r0, r_cap): first-round circle radius targeting ~4x k expected
-    candidates under a uniform-density estimate (acceptance corrects any
-    skew), and the global cap (a 180-deg circle covers the globe)."""
-    earth_area = 4.0 * math.pi * 6371.0087714**2
-    target = max(64.0, 4.0 * k)
-    r_cap_km = float(deg_to_km(180.0))
-    r0 = math.sqrt(target / max(n_total, 1) * earth_area / math.pi)
-    return min(max(r0, 0.5), r_cap_km), r_cap_km
+def _d(x) -> str:
+    """A float as an exact SQL double literal."""
+    return f"{float(x)!r}D"
 
 
-def _coarse_cell(be, fine_level: int, lv: int, lat: str, lon: str):
-    """Column of level-``lv`` cells for the candidate join: the fine
-    encode's ancestor where the backend has a prefix hierarchy, else a
-    re-encode at ``lv`` (h3: hexes don't nest, so there is no ancestor —
-    one extra vectorized encode pass per active level instead)."""
-    if be.has_hierarchy:
-        return be.parent_col("_cellF", fine_level, lv)
-    return be.udf(lv)(F.col(lat), F.col(lon))
+def _cover_level_expr(be, ladder: list[int], r_km: str):
+    """Finest ladder level whose cells keep ~TARGET_CELLS_ACROSS cells
+    across a radius-``r_km`` circle (the coarsest level past that)."""
+    want = f"{r_km} * {_d(2.0 / (KM_PER_DEG * TARGET_CELLS_ACROSS))}"
+    cases = " ".join(f"WHEN {want} <= {_d(be.cell_size_deg(lv))} THEN {lv}" for lv in ladder[:-1])
+    return F.expr(f"CASE {cases} ELSE {ladder[-1]} END")
 
 
-def _cover_level(be, r_km: float, level: int, target_cells_across: float) -> int:
-    """Finest level (<= the encode level) whose cell size keeps a circle
-    cover at ~``target_cells_across`` cells across the diameter."""
-    from spatial4n_spark.kernels.distance import km_to_deg
+def _first_radius(src, q: DataFrame, k: int, ladder: list[int], small: bool) -> DataFrame:
+    """Pending queries with their first radius, from one counts pyramid.
 
-    want = 2.0 * float(km_to_deg(r_km)) / target_cells_across
-    lv = level
-    while lv > 1 and be.cell_size_deg(lv) < want:
-        lv -= 1
-    return lv
+    Pyramid level 0 is the whole globe (its count is the table size);
+    levels below it are the fine cell's ancestors (none for h3). A query
+    takes the finest level whose cell around it holds >= max(8, 2k)
+    points, and a radius that holds ~max(32, 4k) at that cell's density.
+    The expressions are SQL strings: one JVM call each, not one per node.
+    A ``small`` query set is broadcast into the join with the counts and
+    ranked in one partition, saving a shuffle."""
+    be, level = src.be, src.level
+    pyr = ladder[:PYRAMID_LEVELS] if be.has_hierarchy else []
+    thr_sel, thr = max(8, 2 * k), max(32, 4 * k)
 
-
-def knn_join_cover_df(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    lon: str = "lon",
-    lat: str = "lat",
-    id_col: str = "image_id",
-    query_id: str = "query_id",
-    qlon: str = "qlon",
-    qlat: str = "qlat",
-    index: str = "s2",
-    level: int = 12,
-    max_rounds: int = 8,
-    estimated_total: int | None = None,
-    target_cells_across: float = 8.0,
-    broadcast_cells: int = 200_000,
-) -> DataFrame:
-    """Backend-portable exact kNN with the QUERY SET AS A DATAFRAME — the
-    at-scale twin of ``knn_join_cover`` (which composes covers driver-side
-    from a bounded list), completing the surface matrix: geohash and S2
-    both have a driver-list convenience path and a DataFrame-native path.
-
-    Because every pending query shares the same per-round radius (r0
-    doubling on survival — density skew is handled by the exact
-    acceptance check, not per-query radii), each round has ONE cover
-    level, so the plan is simple: a ``mapInPandas`` stage runs the exact
-    circle-cover planner per query (the same ``CellIndexBackend.cover``
-    the radius join uses, distributed — nothing per-query on the
-    driver), candidates come from one prefix-keyed equi-join against the
-    single fine point encode (broadcast under a size bound, else
-    shuffle-by-cell), and acceptance (n >= k and k-th distance <= R) is
-    aggregate + anti-join. Returns (query_id, <id_col>, dist_km, rank);
-    ties break on <id_col>. Results are index-invariant (pytest-equal to
-    ``knn_join_cover`` and ``knn_join``).
-    """
-    from spatial4n_spark.cellindex import cell_backend
-    from spatial4n_spark.kernels.distance import km_to_deg
-
-    spark = points.sparkSession
-    be = cell_backend(index)
-    if be.has_hierarchy:
-        pts = points.withColumn("_cellF", be.udf(level)(F.col(lat), F.col(lon)))
-        pts = pts.select(id_col, lon, lat, "_cellF").persist()
-    else:
-        # h3: _coarse_cell re-encodes at each round's cover level, so a
-        # fine encode would be computed and never read
-        pts = points.select(id_col, lon, lat).persist()
-    n_total = estimated_total if estimated_total is not None else pts.count()
-    r_km, r_cap_km = _initial_cover_radius_km(n_total, k)
-
-    qid_type = queries.schema[query_id].dataType.simpleString()
-    id_type = points.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {qid_type}, {id_col} {id_type}, dist_km double, rank int"
-    cover_schema = (
-        f"_pcell {be.sql_type}, query_id {qid_type}, _qlon double, _qlat double"
-    )
-
-    pending = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(qlon).cast("double").alias("_qlon"),
-        F.col(qlat).cast("double").alias("_qlat"),
-    ).localCheckpoint(eager=False)
-    n_pending = pending.count()
-
-    accepted: list[DataFrame] = []
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_km").asc(), F.col(id_col).asc()
-    )
-
-    def cover_gen(lv: int, r_deg: float):
-        def gen(it):
-            import pandas as pd
-
-            from spatial4n_spark.cellindex import cell_backend as _cb
-            from spatial4n_spark.kernels.polygon import Circle
-
-            be_w = _cb(index)
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                qx = pdf["_qlon"].to_numpy()
-                qy = pdf["_qlat"].to_numpy()
-                if index == "s2":
-                    # one vectorized BFS for the whole batch (superset of
-                    # the exact cover — acceptance is exact either way);
-                    # the scalar per-query planner costs tens of ms per
-                    # circle, which dominates large query sets
-                    from spatial4n_spark.plans.s2cover import (
-                        s2_circle_covers_batch,
-                    )
-
-                    idx_a, cells_a = s2_circle_covers_batch(qx, qy, r_deg, lv)
-                    yield pd.DataFrame(
-                        {
-                            "_pcell": cells_a,
-                            "query_id": pdf["query_id"].to_numpy()[idx_a],
-                            "_qlon": qx[idx_a],
-                            "_qlat": qy[idx_a],
-                        }
-                    )
-                    continue
-                cells: list = []
-                idx: list[int] = []
-                for i in range(len(pdf)):
-                    fulls, bounds = be_w.cover(
-                        Circle(float(qx[i]), float(qy[i]), r_deg, geo=True), lv
-                    )
-                    cs = fulls + bounds
-                    cells.extend(cs)
-                    idx.extend([i] * len(cs))
-                out = pd.DataFrame(
-                    {
-                        "_pcell": np.asarray(
-                            cells, dtype=np.int64 if be_w.sql_type == "long" else object
-                        ),
-                        "query_id": pdf["query_id"].to_numpy()[idx],
-                        "_qlon": qx[idx],
-                        "_qlat": qy[idx],
-                    }
-                )
-                yield out
-
-        return gen
-
-    for _ in range(max_rounds):
-        if n_pending == 0:
-            break
-        lv = _cover_level(be, r_km, level, target_cells_across)
-        covers = pending.mapInPandas(
-            cover_gen(lv, float(km_to_deg(r_km))), cover_schema
-        )
-        # ~target_cells_across^2 cells per query by construction of lv
-        if n_pending * target_cells_across**2 <= broadcast_cells:
-            covers = F.broadcast(covers)
-        cand = pts.withColumn("_pcell", _coarse_cell(be, level, lv, lat, lon)).join(
-            covers, "_pcell"
-        )
-        ranked = (
-            cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        # lazy checkpoint: the pending count below materializes the whole
-        # round (ranked, acceptance, anti-join) as one job
-        ranked = ranked.localCheckpoint(eager=False)
-        summ = ranked.groupBy("query_id").agg(
-            F.count(F.lit(1)).alias("_n"), F.max("dist_km").alias("_dmax")
-        )
-        accepted_ids = summ.where(
-            (F.col("_n") >= k) & (F.col("_dmax") <= F.lit(float(r_km)))
-        ).select("query_id")
-        accepted.append(
-            ranked.join(F.broadcast(accepted_ids), "query_id").select(
-                "query_id", id_col, "dist_km", "rank"
-            )
-        )
-        pending = pending.join(
-            F.broadcast(accepted_ids), "query_id", "left_anti"
-        ).localCheckpoint(eager=False)
-        n_pending = pending.count()
-        r_km = min(r_km * 2.0, r_cap_km)
-
-    if n_pending:
-        # stragglers (n_total < k, or max_rounds exhausted): exact brute
-        # force, broadcasting whichever side is smaller (same rationale
-        # as knn_join_df's fallback)
-        p = points.select(id_col, lon, lat)
-        if n_total <= n_pending:
-            fb_cand = pending.crossJoin(F.broadcast(p))
-        else:
-            fb_cand = p.crossJoin(F.broadcast(pending))
-        fb = (
-            fb_cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        accepted.append(fb.localCheckpoint(eager=True))
-
-    pts.unpersist()
-    if not accepted:
-        return spark.createDataFrame([], out_schema)
-    out = accepted[0]
-    for df in accepted[1:]:
-        out = out.unionAll(df)
-    return out
-
-
-def knn_join_cover(
-    points: DataFrame,
-    queries: list[tuple[str, float, float]],
-    k: int,
-    lon: str = "lon",
-    lat: str = "lat",
-    id_col: str = "image_id",
-    index: str = "s2",
-    level: int = 12,
-    max_rounds: int = 8,
-    estimated_total: int | None = None,
-    target_cells_across: float = 8.0,
-) -> DataFrame:
-    """Exact kNN on any cell-index backend via expanding CIRCLE COVERS.
-
-    The geohash path above enumerates rectangular ring blocks, which
-    leans on lat/lon-aligned cells; S2 cells are not lat/lon rectangles,
-    so the backend-portable form replaces the ring with an exact circle
-    cover (``cellindex.CellIndexBackend.cover`` — the same planner the
-    radius join uses). Per round each pending query covers a radius-R
-    circle at a per-query cover level chosen so the cover stays O(10^2)
-    cells; coarser cover cells join against the ONE fine point encode
-    through the prefix property (int shift for S2, string prefix for
-    geohash — ``parent_col``). The cover is a superset of every cell
-    intersecting the circle, so any point within R km of the query is a
-    candidate, which makes acceptance (n >= k and the k-th distance
-    <= R) exact; survivors double R. Reference analog: GetSubGeohashes
-    ring expansion (GeohashUtils.cs:219-228) — the ring becomes a circle
-    cover, the top-k stays a query-partitioned Window
-    (north_rule: "kNN queries run as cell-ring candidate generation
-    followed by exact-distance top-k via Window ranking").
-
-    ``queries``: [(query_id, qlon, qlat)]. Returns (query_id, <id_col>,
-    dist_km, rank); ties break on <id_col>. Results are index-invariant
-    (pytest-equal to ``knn_join``); the circle covers handle pole and
-    dateline queries through the planner's piece splitting.
-    """
-    from spatial4n_spark.cellindex import cell_backend
-    from spatial4n_spark.kernels.distance import km_to_deg
-    from spatial4n_spark.kernels.polygon import Circle
-
-    spark = points.sparkSession
-    be = cell_backend(index)
-    if be.has_hierarchy:
-        pts = points.withColumn("_cellF", be.udf(level)(F.col(lat), F.col(lon)))
-        pts = pts.select(id_col, lon, lat, "_cellF").persist()
-    else:
-        pts = points.select(id_col, lon, lat).persist()
-
-    n_total = estimated_total if estimated_total is not None else pts.count()
-    r0, r_cap_km = _initial_cover_radius_km(n_total, k)
-
-    def cover_level(r_km: float) -> int:
-        return _cover_level(be, r_km, level, target_cells_across)
-
-    pending = {qid: (float(a), float(b)) for qid, a, b in queries}
-    radius = {qid: r0 for qid in pending}
-    accepted: list[DataFrame] = []
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_km").asc(), F.col(id_col).asc()
-    )
-    out_schema = (
-        f"query_id string, {id_col} {points.schema[id_col].dataType.simpleString()},"
-        " dist_km double, rank int"
-    )
-
-    for _ in range(max_rounds):
-        if not pending:
-            break
-        # cover every pending query's circle (driver-side: list path)
-        by_level: dict[int, list[tuple]] = {}
-        for qid, (qx, qy) in pending.items():
-            r_km = radius[qid]
-            lv = cover_level(r_km)
-            circle = Circle(qx, qy, float(km_to_deg(r_km)), geo=True)
-            fulls, bounds = be.cover(circle, lv)
-            by_level.setdefault(lv, []).extend(
-                (c, qid, qx, qy) for c in fulls + bounds
-            )
-        cand = None
-        for lv, rows in sorted(by_level.items()):
-            cov = spark.createDataFrame(
-                rows,
-                f"_pcell {be.sql_type}, query_id string, _qlon double, _qlat double",
-            )
-            c = pts.withColumn("_pcell", _coarse_cell(be, level, lv, lat, lon)).join(
-                F.broadcast(cov), "_pcell"
-            )
-            cand = c if cand is None else cand.unionAll(c)
-        ranked = (
-            cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        # ONE heavy job per round (same pattern as knn_join): the summary
-        # collect materializes the lazy checkpoint
-        ranked = ranked.localCheckpoint(eager=False)
-        summ = (
-            ranked.groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("dist_km").alias("dmax"))
-            .collect()
-        )
-        info = {r["query_id"]: (r["n"], r["dmax"]) for r in summ}
-        ok = [
-            qid
-            for qid in pending
-            if info.get(qid, (0, None))[0] >= k and info[qid][1] <= radius[qid]
+    def keys(cell: str):
+        structs = [f"named_struct('_plv', 0, '_pc', CAST(0 AS {be.sql_type}))"] + [
+            f"named_struct('_plv', {lv}, '_pc', {be.parent_sql(cell, level, lv)})" for lv in pyr
         ]
-        if ok:
-            accepted.append(ranked.where(F.col("query_id").isin(ok)))
-        ok_set = set(ok)
-        pending = {q: v for q, v in pending.items() if q not in ok_set}
-        for qid in pending:
-            radius[qid] = min(radius[qid] * 2.0, r_cap_km)
+        return F.expr(f"inline(array({', '.join(structs)}))")
 
-    if pending:
-        # stragglers (n_total < k, or max_rounds exhausted): exact brute
-        # force — broadcast the bounded query list, shuffle keyed by
-        # query_id only
-        rows = [(qid, a, b) for qid, (a, b) in pending.items()]
-        q_df = spark.createDataFrame(rows, "query_id string, _qlon double, _qlat double")
-        fb = (
-            points.select(id_col, lon, lat)
-            .crossJoin(F.broadcast(q_df))
-            .withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        accepted.append(fb.localCheckpoint(eager=True))
-
-    pts.unpersist()
-    if not accepted:
-        return spark.createDataFrame([], out_schema)
-    out = accepted[0]
-    for df in accepted[1:]:
-        out = out.unionAll(df)
-    return out
+    cnt = src.rows.select(keys(src.cell)).groupBy("_plv", "_pc").agg(F.count(F.lit(1)).alias("_n"))
+    if pyr and "_qcell" not in q.columns:
+        q = q.withColumn("_qcell", be.udf(level)(F.col("_qlat"), F.col("_qlon")))
+    qk = q.select("query_id", "_qlon", "_qlat", keys("_qcell"))
+    areas = " ".join(
+        f"WHEN _plv = {lv} THEN {_d(deg_to_km(be.cell_size_deg(lv)) ** 2)}" for lv in pyr
+    )
+    area = f"CASE {areas} ELSE {_d(EARTH_KM2)} END" if pyr else _d(EARTH_KM2)
+    r = f"sqrt({_d(thr)} / greatest(_n, 1) * ({area}) / pi())"
+    r = f"max_by({r}, CASE WHEN _n >= {thr_sel} OR _plv = 0 THEN _plv END)"
+    r_min = float(deg_to_km(be.cell_size_deg(level)))
+    # inner join: the level-0 key matches every query of a non-empty table
+    per_query = cnt.join(F.broadcast(qk) if small else qk, ["_plv", "_pc"])
+    if small:
+        per_query = per_query.coalesce(1)
+    return per_query.groupBy("query_id", "_qlon", "_qlat").agg(
+        F.expr(f"least(greatest({r}, {_d(r_min)}), {_d(R_CAP_KM)})").alias("_r"),
+        F.expr("CAST(max(CASE WHEN _plv = 0 THEN _n END) AS BIGINT)").alias("_ntot"),
+    ).withColumn("_lv", _cover_level_expr(be, ladder, "_r"))
 
 
 def knn_join(
-    points: DataFrame,
-    queries: list[tuple[str, float, float]],
+    points: DataFrame | str,
+    queries: DataFrame | list[tuple],
     k: int,
     lon: str = "lon",
     lat: str = "lat",
     id_col: str = "image_id",
-    level: int = 3,
-    max_rounds: int = 4,
-    estimated_total: int | None = None,
-    df_threshold: int = 64,
+    query_id: str = "query_id",
+    qlon: str = "qlon",
+    qlat: str = "qlat",
+    index: str = "geohash",
+    level: int | None = None,
 ) -> DataFrame:
-    """``queries``: [(query_id, qlon, qlat)]. Returns (query_id, <id_col>,
-    dist_km, rank); ties break on <id_col> for determinism.
+    """Exact kNN join. Returns (query_id, <id_col>, dist_km, rank); ties
+    break on <id_col>.
 
-    The driver-list fast path applies only to a BOUNDED query set
-    (dashboards, the gate's 4 centers): the ring cells compose
-    driver-side and the acceptance summary collects (<= |queries| rows),
-    so each round is ONE heavy Spark job — none of the bookkeeping joins
-    the DataFrame path needs.  Above ``df_threshold`` queries the
-    per-query driver state (the pending dict, the ``isin`` literal lists
-    in the plan) stops being bounded bookkeeping and starts scaling with
-    the workload, so the call routes to ``knn_join_df`` — the
-    density-adaptive plan that keeps every per-query structure
-    distributed (capacity-proven flat driver RSS at 10^5 queries,
-    bench_runs/knn_cap_clustered_r4.json).  Both paths are EXACT kNN
-    with the same deterministic tie-break, so the routed result is
-    bit-identical.
-    """
-    spark = points.sparkSession
-    if len(queries) > df_threshold:
-        q_df = spark.createDataFrame(
+    ``points``: a points DataFrame (scan source, encoded with ``index``
+    at ``level``, default ``DEFAULT_LEVEL[index]``), or the path of a
+    clustered table (its own S2 level; ``index``/``level`` unused).
+    ``queries``: a DataFrame with (``query_id``, ``qlon``, ``qlat``), or
+    a list of (query_id, lon, lat) tuples, which becomes one."""
+    if isinstance(points, str):
+        spark = queries.sparkSession if isinstance(queries, DataFrame) else SparkSession.active()
+        src = _Clustered(spark, points)
+    else:
+        spark = points.sparkSession
+        src = _Scan(points, index, level or DEFAULT_LEVEL[index], id_col, lon, lat)
+    be, ladder = src.be, _ladder(src.be, src.level)
+    n_known = None
+    if isinstance(queries, DataFrame):
+        qid_type = queries.schema[query_id].dataType.simpleString()
+        q0 = queries.select(
+            F.col(query_id).alias("query_id"),
+            F.col(qlon).cast("double").alias("_qlon"),
+            F.col(qlat).cast("double").alias("_qlat"),
+        )
+    else:
+        # a list becomes a local relation, its fine cells encoded here
+        n_known, qid_type = len(queries), "string"
+        qpd = pd.DataFrame(
             [(str(q), float(a), float(b)) for q, a, b in queries],
-            "query_id string, qlon double, qlat double",
+            columns=["query_id", "_qlon", "_qlat"],
         )
-        return knn_join_df(
-            points, q_df, k, lon=lon, lat=lat, id_col=id_col,
-            max_rounds=max_rounds, estimated_total=estimated_total,
+        qpd["_qcell"] = be.kernel(qpd["_qlat"].to_numpy(), qpd["_qlon"].to_numpy(), src.level)
+        q0 = spark.createDataFrame(
+            qpd, f"query_id string, _qlon double, _qlat double, _qcell {be.sql_type}"
         )
-    pts = points.withColumn("_cell", geohash_udf(level)(F.col(lat), F.col(lon)))
-    pts = pts.select(id_col, lon, lat, "_cell")
-    # the encoded points are re-scanned by every ring-expansion round (and
-    # by the brute-force fallback): cache them across rounds — the iterative
-    # reuse pattern, not a driver-side materialization
-    pts = pts.persist()
-
-    n_total = estimated_total if estimated_total is not None else pts.count()
-    n_cells_world = 32**level
-    density = max(n_total / n_cells_world, 1e-9)  # rows per cell (uniform est.)
-    # cells needed for ~4x k candidates; ring r covers (2r+1)^2 cells
-    cells_needed = 4.0 * k / density
-    rings0 = max(1, math.ceil((math.sqrt(cells_needed) - 1) / 2))
-
-    pending = {qid: (qlon_v, qlat_v) for qid, qlon_v, qlat_v in queries}
-    rings = rings0
-    accepted: list[DataFrame] = []
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_km").asc(), F.col(id_col).asc()
+    pending_schema = (
+        f"query_id {qid_type}, _qlon double, _qlat double, _r double, _ntot long, _lv int"
     )
-    out_schema = (
-        f"query_id string, {id_col} {points.schema[id_col].dataType.simpleString()},"
-        " dist_km double, rank int"
-    )
+    cover_schema = f"_pcell {be.sql_type}, {pending_schema}"
+    out_cols = ["query_id", id_col, "dist_km", "rank"]
+    w = Window.partitionBy("query_id").orderBy(F.col("dist_km").asc(), F.col(id_col).asc())
 
-    rounds = max_rounds if (2 * rings0 + 1) ** 2 < n_cells_world // 4 else 0
-
-    for _ in range(rounds):
-        if not pending:
-            break
-        if (2 * rings + 1) ** 2 >= n_cells_world // 4:
-            break  # doubled past the useful range: fall back
-        qids = list(pending)
-        cells_pd = _ring_cells_frame(
-            qids,
-            [pending[q][0] for q in qids],
-            [pending[q][1] for q in qids],
-            level,
-            rings,
-        )
-        cand_df = spark.createDataFrame(
-            cells_pd[["_cell", "query_id", "_qlon", "_qlat"]],
-            "_cell string, query_id string, _qlon double, _qlat double",
-        )
-        cand = pts.join(F.broadcast(cand_df), "_cell")
-        ranked = (
-            cand.withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
-            )
+    def top_k(cand: DataFrame) -> DataFrame:
+        return (
+            cand.withColumn("dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat"))
             .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
         )
-        # ONE Spark job per round: the summary collect right below
-        # materializes the lazily-checkpointed bounded top-k
-        # (<= |pending| * k rows) and truncates lineage; the acceptance
-        # summary and the accepted-rows filter read the materialized
-        # result, never re-running the join
-        ranked = ranked.localCheckpoint(eager=False)
-        summ = (
-            ranked.groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("dist_km").alias("dmax"))
-            .collect()
-        )
-        info = {r["query_id"]: (r["n"], r["dmax"]) for r in summ}
-        ok = [
-            qid
-            for qid, (_, qlat_v) in pending.items()
-            if info.get(qid, (0, None))[0] >= k
-            and info[qid][1] <= _covered_radius_km(qlat_v, level, rings)
-        ]
-        if ok:
-            accepted.append(ranked.where(F.col("query_id").isin(ok)))
-        ok_set = set(ok)
-        pending = {qid: v for qid, v in pending.items() if qid not in ok_set}
-        rings *= 2
 
-    if pending:
-        # final fallback: exact brute force for the stragglers (pole/sparse
-        # regions) — still a broadcast join, no big-side shuffle
-        rows = [(qid, a, b) for qid, (a, b) in pending.items()]
-        q_df = spark.createDataFrame(rows, "query_id string, _qlon double, _qlat double")
-        fb = (
-            points.select(id_col, lon, lat)
-            .crossJoin(F.broadcast(q_df))
-            .withColumn(
-                "dist_km", haversine_km(F.col(lon), F.col(lat), "_qlon", "_qlat")
+    def observe(pending: DataFrame, small: bool):
+        """The round's one bounded collect: the pending rows themselves
+        when few, else per-level counts over the lazily checkpointed set.
+        Returns (pending, count, driver rows or None, levels, table size)."""
+        if not small:
+            pending = pending.localCheckpoint(eager=False)
+            st = pending.groupBy("_lv").agg(F.count(F.lit(1)), F.max("_ntot")).collect()
+            n = sum(r[1] for r in st)
+            if n > SMALL_PENDING or not n:
+                n_tot = max((r[2] for r in st), default=0)
+                return pending, n, None, sorted(r[0] for r in st), n_tot
+        pdf = pd.DataFrame.from_records(pending.collect(), columns=PENDING_COLS)
+        n_tot = int(pdf["_ntot"].max()) if len(pdf) else 0
+        return pending, len(pdf), pdf, sorted(set(pdf["_lv"].tolist())), n_tot
+
+    def cover_gen(it):
+        for p in it:
+            if len(p):
+                yield _cover_frame(be, p)
+
+    def key(lv: int):
+        """A point's level-``lv`` cell, for the join with the covers."""
+        if be.has_hierarchy:
+            return be.parent_col(src.cell, src.level, lv)
+        return be.udf(lv)(F.col(lat), F.col(lon))
+
+    try:
+        small = n_known is not None and n_known <= SMALL_PENDING
+        pending = _first_radius(src, q0, k, ladder, small).select(*PENDING_COLS)
+        pending, n_pending, pdf, levels, n_total = observe(pending, small)
+        k_eff = min(k, n_total)  # a table smaller than k accepts all of it
+        accepted: list[DataFrame] = []
+        for _ in range(MAX_ROUNDS if n_total else 0):
+            if not n_pending:
+                break
+            if pdf is not None:
+                cover_pdf = _cover_frame(be, pdf)
+                covers = spark.createDataFrame(cover_pdf, cover_schema)
+            else:
+                cover_pdf, covers = None, pending.mapInPandas(cover_gen, cover_schema)
+            rows, covers = src.round_rows(covers, cover_pdf)
+            if n_pending * TARGET_CELLS_ACROSS**2 <= BROADCAST_CELLS:
+                covers = F.broadcast(covers)
+            else:
+                covers = covers.hint("merge")
+            pairs = F.inline(F.array(*[
+                F.struct(F.lit(lv).alias("_lv"), key(lv).alias("_pcell")) for lv in levels
+            ]))
+            cand = rows.select(id_col, lon, lat, pairs)
+            ranked = (
+                top_k(cand.join(covers, ["_lv", "_pcell"]))
+                .select(*out_cols, "_r")
+                .localCheckpoint(eager=False)
             )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", id_col, "dist_km", "rank")
-        )
-        accepted.append(fb.localCheckpoint(eager=True))
+            ok = (
+                ranked.groupBy("query_id")
+                .agg(
+                    F.count(F.lit(1)).alias("_n"),
+                    F.max("dist_km").alias("_d"),
+                    F.first("_r").alias("_r"),
+                )
+                .where((F.col("_n") >= k_eff) & (F.col("_d") <= F.col("_r")))
+                .select("query_id")
+            )
+            if pdf is not None:
+                # an empty pandas frame is no local relation: skip building one
+                ok_ids = [r[0] for r in ok.collect()]
+                if ok_ids:
+                    ok = spark.createDataFrame(
+                        pd.DataFrame({"query_id": ok_ids}), f"query_id {qid_type}"
+                    )
+                    accepted.append(ranked.join(F.broadcast(ok), "query_id").select(*out_cols))
+                pdf = pdf[~pdf["query_id"].isin(ok_ids)]
+                if pdf.empty:
+                    n_pending = 0
+                    break
+                pending = spark.createDataFrame(pdf, pending_schema)
+            else:
+                accepted.append(ranked.join(F.broadcast(ok), "query_id").select(*out_cols))
+                pending = pending.join(F.broadcast(ok), "query_id", "left_anti")
+            pending = pending.withColumn("_r", F.expr(f"least(_r * 2.0D, {_d(R_CAP_KM)})"))
+            pending = pending.withColumn("_lv", _cover_level_expr(be, ladder, "_r"))
+            pending, n_pending, pdf, levels, _ = observe(pending, pdf is not None)
 
-    pts.unpersist()
+        if n_pending:
+            # stragglers: exact brute force, broadcasting the smaller side
+            p = src.rows.select(id_col, lon, lat)
+            if pdf is not None:
+                pending = spark.createDataFrame(pdf, pending_schema)
+            if n_total <= n_pending:
+                fb = pending.crossJoin(F.broadcast(p))
+            else:
+                fb = p.crossJoin(F.broadcast(pending))
+            accepted.append(top_k(fb).select(*out_cols).localCheckpoint(eager=True))
+    finally:
+        src.close()  # the scan source's persisted encode
     if not accepted:
-        return spark.createDataFrame([], out_schema)
+        id_type = src.rows.schema[id_col].dataType.simpleString()
+        return spark.createDataFrame(
+            [], f"query_id {qid_type}, {id_col} {id_type}, dist_km double, rank int"
+        )
     out = accepted[0]
     for df in accepted[1:]:
         out = out.unionAll(df)

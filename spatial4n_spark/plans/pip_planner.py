@@ -156,11 +156,16 @@ def plan_pip_join(
         # bounded collect: the layer IS broadcast-sized
         from spatial4n_spark.io.wkt import parse_wkt
 
+        if "wkt" not in layer.columns:
+            raise ValueError(
+                f"PIP layer DataFrame has no 'wkt' column (columns: {layer.columns})"
+            )
         rows = layer.collect()
         poly_id = layer.columns[0]
-        wkt_col = "wkt" if "wkt" in layer.columns else layer.columns[1]
-        layer = [(r[poly_id], parse_wkt(r[wkt_col], geo)) for r in rows]
+        layer = [(r[poly_id], parse_wkt(r["wkt"], geo)) for r in rows]
 
+    if not layer:
+        raise ValueError("PIP layer is empty: there are no polygons to plan a join for")
     stats["n_features"] = len(layer)
     spread = _bbox_spread(layer, geo)
     stats["bbox_spread_p90_over_med"] = round(spread, 2)

@@ -27,7 +27,7 @@ from spatial4n_spark import oracles as O
 from spatial4n_spark.functions.native import haversine_km, rect_contains_point
 from spatial4n_spark.functions.udfs import circle_bbox_udf, dist_km_udf, relate_bbox_udf
 from spatial4n_spark.operators.distance_join import radius_join
-from spatial4n_spark.operators.knn import knn_join, knn_join_df
+from spatial4n_spark.operators.knn import knn_join
 from spatial4n_spark.operators.spatial_join import (
     spatial_join_points_polygons,
     spatial_join_points_polygons_df,
@@ -739,16 +739,13 @@ def q_radius_join_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN probing the clustered layout: each round's query circle
-    becomes cover id ranges (manifest file pruning + pushed row groups),
-    accepted when the k-th distance fits the covered radius — the third
-    query family on the storage artifact (PIP, radius, kNN). Oracle =
-    the brute-force kNN SQL; results are layout-invariant."""
-    from spatial4n_spark.io.clustered import clustered_knn
-
+    """Exact kNN over the clustered layout: the same round loop as `knn`,
+    reading each round only the files and row groups its cover ranges
+    touch — the third query family on the storage artifact (PIP, radius,
+    kNN). Oracle = the brute-force kNN SQL; results are layout-invariant."""
     path = _clustered_path(spark, sf_dir)
     queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
-    out = clustered_knn(spark, path, queries, k=KNN_K, id_col="o_orderkey")
+    out = knn_join(path, queries, k=KNN_K, id_col="o_orderkey")
     return out.select("query_id", "o_orderkey", "rank")
 
 
@@ -763,131 +760,63 @@ def sql_radius_join() -> str:
     return f"WITH {ORDERS_PTS_CTE}\n" + "\nUNION ALL\n".join(parts)
 
 
-def _parquet_num_rows(path: str) -> int | None:
-    """Row count from parquet footers, driver-side — saves the count() job
-    that would otherwise pre-size the kNN rings."""
-    import glob
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-
-        files = (
-            sorted(glob.glob(os.path.join(path, "*.parquet")))
-            if os.path.isdir(path)
-            else [path]
-        )
-        if not files:
-            return None
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        return None
-
-
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN via cell-ring candidates + window top-k."""
+    """Exact kNN (``knn_join``): a driver-side query list over a geohash
+    scan. Each round covers every pending circle in cells, joins the
+    covers to the points, and takes an exact-distance Window top-k."""
     queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
-    out = knn_join(
-        pts_orders(spark, sf_dir),
-        queries,
-        k=KNN_K,
-        id_col="o_orderkey",
-        level=3,
-        estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
-    )
+    out = knn_join(pts_orders(spark, sf_dir), queries, k=KNN_K, id_col="o_orderkey", level=3)
     return out.select("query_id", "o_orderkey", "rank")
 
 
 def q_knn_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact kNN through the DataFrame-native, density-adaptive path
-    (`knn_join_df`): per-query grid levels from a counts pyramid,
-    anisotropic ring blocks expanded in mapInPandas, acceptance via
-    aggregate + anti-join — nothing per-query on the driver. Gate-verifying
-    this path means the plan a 10^6-query batch would use is the audited
-    one; the `knn` row covers the driver-list convenience surface."""
+    """The same kNN with the queries as a DataFrame, so the gate covers
+    the distributed round shape a large query set takes: first radii
+    from the counts pyramid, covers planned in mapInPandas, acceptance
+    as aggregate + anti-join."""
     qdf = spark.createDataFrame(
         [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS],
         "query_id string, qlon double, qlat double",
     )
-    out = knn_join_df(
-        pts_orders(spark, sf_dir),
-        qdf,
-        k=KNN_K,
-        id_col="o_orderkey",
-        estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
-    )
+    out = knn_join(pts_orders(spark, sf_dir), qdf, k=KNN_K, id_col="o_orderkey")
     return out.select("query_id", "o_orderkey", "rank")
 
 
 def q_knn_s2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN on the S2 cell backend via expanding circle covers
-    (`knn_join_cover`, index="s2"): per round each pending query covers
-    a radius-R circle in S2 cells (the radius-join planner), candidates
-    join the ONE fine point encode through the int-shift prefix
-    property, acceptance (k-th distance <= R) is exact. With this row
-    the S2 index is gate-verified join-complete: PIP, radius, tiles,
-    raster AND kNN. Results are index-invariant — the oracle is the
-    same brute-force SQL as `knn`."""
-    from spatial4n_spark.operators.knn import knn_join_cover
-
+    """Exact kNN on the S2 backend: circle covers in S2 cells join the
+    one fine point encode through the int-shift prefix property. With
+    this row the S2 index is join-complete: PIP, radius, tiles, raster
+    and kNN. Results are index-invariant — the oracle is the same
+    brute-force SQL as `knn`."""
     queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
-    out = knn_join_cover(
-        pts_orders(spark, sf_dir),
-        queries,
-        k=KNN_K,
-        id_col="o_orderkey",
-        index="s2",
-        level=12,
-        estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
+    out = knn_join(
+        pts_orders(spark, sf_dir), queries, k=KNN_K, id_col="o_orderkey", index="s2", level=12
     )
     return out.select("query_id", "o_orderkey", "rank")
 
 
 def q_knn_h3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN on the H3 hex backend via expanding circle covers
-    (`knn_join_cover`, index="h3"). Hexes have no prefix hierarchy, so
-    the candidate join re-encodes points at each round's cover level
-    (one extra vectorized pass) instead of shifting the fine encode —
-    with this row all THREE cell backends are gate-verified
-    join-complete: PIP, radius, tiles, raster AND kNN. Results are
-    index-invariant — the oracle is the same brute-force SQL as `knn`."""
-    from spatial4n_spark.operators.knn import knn_join_cover
-
+    """Exact kNN on the H3 hex backend. Hexes have no prefix hierarchy,
+    so the candidate join re-encodes points at each round's cover level
+    instead of shifting a fine encode. Results are index-invariant —
+    the oracle is the same brute-force SQL as `knn`."""
     queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
-    out = knn_join_cover(
-        pts_orders(spark, sf_dir),
-        queries,
-        k=KNN_K,
-        id_col="o_orderkey",
-        index="h3",
-        level=7,
-        estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
+    out = knn_join(
+        pts_orders(spark, sf_dir), queries, k=KNN_K, id_col="o_orderkey", index="h3", level=7
     )
     return out.select("query_id", "o_orderkey", "rank")
 
 
 def q_knn_s2_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact S2 kNN through the DataFrame-native cover path
-    (`knn_join_cover_df`): per-query circle covers planned DISTRIBUTED
-    in a mapInPandas stage, candidates via the int-shift prefix join,
-    acceptance as aggregate + anti-join — the plan a 10^6-query S2 batch
-    would use, gate-verified (the `knn_s2` row covers the driver-list
-    convenience surface). Results are index- and surface-invariant; the
-    oracle is the same brute-force SQL as `knn`."""
-    from spatial4n_spark.operators.knn import knn_join_cover_df
-
+    """The S2 kNN with the queries as a DataFrame (the distributed round
+    shape, as in `knn_df`). Results are index- and surface-invariant;
+    the oracle is the same brute-force SQL as `knn`."""
     qdf = spark.createDataFrame(
         [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS],
         "query_id string, qlon double, qlat double",
     )
-    out = knn_join_cover_df(
-        pts_orders(spark, sf_dir),
-        qdf,
-        k=KNN_K,
-        id_col="o_orderkey",
-        index="s2",
-        level=12,
-        estimated_total=_parquet_num_rows(f"{sf_dir}/orders.parquet"),
+    out = knn_join(
+        pts_orders(spark, sf_dir), qdf, k=KNN_K, id_col="o_orderkey", index="s2", level=12
     )
     return out.select("query_id", "o_orderkey", "rank")
 

@@ -270,33 +270,6 @@ def test_stream_ingest_into_clustered_equals_batch(spark, sf_dir, tmp_path):
     assert got_c == want
 
 
-def test_clustered_knn_equals_ring_knn(spark, clustered):
-    """clustered_knn (expanding cover-range probes over the layout) must
-    return exactly what the ring-expansion kNN returns — incl. the pole
-    and dateline queries, where the S2 cover pieces matter."""
-    from spatial4n_spark.operators.knn import knn_join
-
-    path, pts = clustered
-    queries = [(qid, qlon, qlat) for qid, qlon, qlat, _ in RADIUS_CENTERS]
-    want = sorted(
-        map(
-            tuple,
-            knn_join(pts, queries, k=5, id_col="o_orderkey", level=3)
-            .select("query_id", "o_orderkey", "rank")
-            .collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            C.clustered_knn(spark, path, queries, k=5, id_col="o_orderkey")
-            .select("query_id", "o_orderkey", "rank")
-            .collect(),
-        )
-    )
-    assert got == want and len(got) == 4 * 5
-
-
 def test_st_clustered_time_and_space_pruning(spark, sf_dir, tmp_path):
     """Spatio-temporal layout (io/st_clustered.py): day-partition +
     manifest pruning must compose — a 2-of-8-day Paris query keeps only

@@ -105,3 +105,39 @@ def test_broken_native_codec_fails_self_check(monkeypatch, capsys):
 
 def test_self_check_psnr_scores_pure_as_perfect():
     assert I._jpeg_self_check_psnr(jpeg_decode_batch) == float("inf")
+
+
+def test_cv2_candidate_rejects_undecodable_buffer(monkeypatch):
+    """cv2.imdecode returns None on a buffer it cannot decode; the cv2
+    candidate must turn that into a ValueError, not hand None on."""
+    import sys
+    import types
+
+    fake = types.ModuleType("cv2")
+    fake.IMREAD_COLOR, fake.COLOR_BGR2RGB = 1, 4
+    fake.imdecode = lambda buf, flag: None
+    fake.cvtColor = lambda img, code: img[..., ::-1]
+    monkeypatch.setitem(sys.modules, "cv2", fake)
+    found = dict(I._native_jpeg_candidates())
+    with pytest.raises(ValueError, match="imdecode"):
+        found["cv2"](_test_jpegs(1))
+
+
+def test_broken_codec_imports_are_not_fatal(monkeypatch):
+    """A binding whose import fails with something other than
+    ImportError (a missing shared library) is skipped, as turbojpeg's
+    already was."""
+    import importlib.abc
+    import sys
+
+    class Broken(importlib.abc.MetaPathFinder):
+        def find_spec(self, name, path, target=None):
+            if name.split(".")[0] in ("PIL", "cv2"):
+                raise OSError("libGL.so.1: cannot open shared object file")
+            return None
+
+    for mod in ("PIL", "cv2"):
+        monkeypatch.delitem(sys.modules, mod, raising=False)
+    monkeypatch.setattr(sys, "meta_path", [Broken()] + sys.meta_path)
+    names = [name for name, _ in I._native_jpeg_candidates()]
+    assert "pil" not in names and "cv2" not in names

@@ -106,6 +106,23 @@ def test_small_df_layer_is_collected_and_planned(spark):
     assert isinstance(use_layer, list) and len(use_layer) == len(rows)
 
 
+def test_empty_layer_raises_value_error(spark):
+    pts = spark.range(1).select(F.lit(0.0).alias("lon"), F.lit(0.0).alias("lat"))
+    with pytest.raises(ValueError, match="empty"):
+        plan_pip_join(pts, [])
+    empty = spark.createDataFrame([], "poly_id string, wkt string")
+    with pytest.raises(ValueError, match="empty"):
+        plan_pip_join(pts, empty)
+
+
+def test_df_layer_without_wkt_column_raises_value_error(spark):
+    rows = [(pid, to_wkt(s)) for pid, s in _uniform_layer(3)]
+    layer = spark.createDataFrame(rows, "poly_id string, geom string")
+    pts = spark.range(1).select(F.lit(0.0).alias("lon"), F.lit(0.0).alias("lat"))
+    with pytest.raises(ValueError, match="'wkt'"):
+        plan_pip_join(pts, layer)
+
+
 @pytest.fixture(scope="module")
 def points(spark):
     from spatial4n_spark.sources.images import images_df

@@ -147,23 +147,129 @@ def test_radius_join_df_equals_list_path(spark, points, index):
     assert got_shuffle == want
 
 
-def test_knn_matches_bruteforce(spark, points, coords):
+KNN_QUERIES = [
+    ("q_paris", 2.35, 48.85),
+    ("q_dl", 179.9, -5.0),
+    ("q_sparse", -120.0, -55.0),
+    ("q_pole", 10.0, 89.5),
+    ("q_lon", -0.1, 51.5),
+]
+
+
+def _bruteforce_knn(coords, queries, k):
+    """{query_id: [(image_id, dist_km)] in rank order} by numpy haversine,
+    ties on image_id."""
     ids, lon, lat = coords
-    queries = [("q_paris", 2.35, 48.85), ("q_dl", 179.9, -5.0), ("q_sparse", -120.0, -55.0)]
-    k = 7
-    out = knn_join(points, queries, k=k, level=3)
-    got = {}
-    for r in out.collect():
-        got.setdefault(r["query_id"], []).append((r["rank"], r["image_id"], r["dist_km"]))
+    out = {}
     for qid, qlon, qlat in queries:
         d = np.asarray(deg_to_km(distance_deg(qlon, qlat, lon, lat, "haversine")))
         order = sorted(range(len(d)), key=lambda i: (d[i], f"img{int(ids[i]):09d}"))[:k]
-        want_ids = [f"img{int(ids[i]):09d}" for i in order]
-        got_ids = [img for _, img, _ in sorted(got[qid])]
-        assert got_ids == want_ids, qid
+        out[qid] = [(f"img{int(ids[i]):09d}", d[i]) for i in order]
+    return out
+
+
+def _ranked(df):
+    got = {}
+    for r in df.collect():
+        got.setdefault(r["query_id"], []).append((r["rank"], r["image_id"], r["dist_km"]))
+    return {q: [(img, d) for _, img, d in sorted(v)] for q, v in got.items()}
+
+
+def test_knn_matches_bruteforce(spark, points, coords):
+    k = 7
+    got = _ranked(knn_join(points, KNN_QUERIES, k=k, level=3))
+    for qid, want in _bruteforce_knn(coords, KNN_QUERIES, k).items():
+        assert [img for img, _ in got[qid]] == [img for img, _ in want], qid
         np.testing.assert_allclose(
-            sorted(x[2] for x in got[qid]), sorted(d[i] for i in order), rtol=1e-9
+            [d for _, d in got[qid]], [d for _, d in want], rtol=1e-9
         )
+
+
+@pytest.fixture(scope="module")
+def clustered_points(points, tmp_path_factory):
+    from spatial4n_spark.io.clustered import write_clustered
+
+    path = str(tmp_path_factory.mktemp("knn_clustered"))
+    write_clustered(points, path, level=14, files=8)
+    return path
+
+
+@pytest.mark.parametrize("join", ["broadcast", "shuffle"])
+@pytest.mark.parametrize("surface", ["list", "dataframe"])
+@pytest.mark.parametrize(
+    "source,index",
+    [("scan", "geohash"), ("scan", "s2"), ("scan", "h3"), ("clustered", "s2")],
+)
+def test_knn_core_matches_bruteforce(
+    spark, points, coords, clustered_points, monkeypatch, source, index, surface, join
+):
+    """The one kNN core against numpy brute force, on every candidate
+    source x cell index x query surface x join strategy. Pole and
+    dateline queries exercise the cover seams; the dataframe surface
+    keeps every round distributed (no driver-side small shape)."""
+    from spatial4n_spark.operators import knn as K
+
+    if join == "shuffle":
+        monkeypatch.setattr(K, "BROADCAST_CELLS", 0)
+    queries = KNN_QUERIES
+    if surface == "dataframe":
+        monkeypatch.setattr(K, "SMALL_PENDING", 0)
+        queries = spark.createDataFrame(queries, "query_id string, qlon double, qlat double")
+    src = points if source == "scan" else clustered_points
+    k = 7
+    got = _ranked(knn_join(src, queries, k=k, index=index))
+    want = _bruteforce_knn(coords, KNN_QUERIES, k)
+    assert {q: [img for img, _ in v] for q, v in got.items()} == {
+        q: [img for img, _ in v] for q, v in want.items()
+    }
+
+
+@pytest.mark.parametrize("source", ["scan", "clustered"])
+def test_knn_k_above_table_size(spark, points, coords, clustered_points, source):
+    """k > n_total: every query gets the whole table, ranked."""
+    from spatial4n_spark.io.clustered import write_clustered
+
+    ids, lon, lat = coords
+    few = points.where(F.col("image_id") < "img000000006")
+    src = few
+    if source == "clustered":
+        src = clustered_points + "_few"
+        write_clustered(few, src, level=14, files=2)
+    coords6 = (ids[:6], lon[:6], lat[:6])
+    got = _ranked(knn_join(src, KNN_QUERIES[:2], k=9))
+    want = _bruteforce_knn(coords6, KNN_QUERIES[:2], 9)
+    assert {q: [img for img, _ in v] for q, v in got.items()} == {
+        q: [img for img, _ in v] for q, v in want.items()
+    }
+    assert all(len(v) == 6 for v in got.values())
+
+
+@pytest.mark.parametrize("n_queries", [5, 100])
+def test_knn_explicit_level_honoured(spark, points, coords, monkeypatch, n_queries):
+    """An explicit ``level`` is the level the points are encoded at, for
+    a small query list (driver-side rounds) and a large one (distributed
+    rounds) alike."""
+    from spatial4n_spark.cellindex import CellIndexBackend
+
+    seen = []
+    udf = CellIndexBackend.udf
+
+    def spy(self, level):
+        seen.append(level)
+        return udf(self, level)
+
+    monkeypatch.setattr(CellIndexBackend, "udf", spy)
+    rng = np.random.default_rng(5)
+    queries = (KNN_QUERIES + [
+        (f"r{i}", float(x), float(y))
+        for i, (x, y) in enumerate(zip(rng.uniform(-180, 180, 95), rng.uniform(-90, 90, 95)))
+    ])[:n_queries]
+    got = _ranked(knn_join(points, queries, k=3, index="geohash", level=4))
+    assert seen and set(seen) == {4}
+    want = _bruteforce_knn(coords, queries, 3)
+    assert {q: [img for img, _ in v] for q, v in got.items()} == {
+        q: [img for img, _ in v] for q, v in want.items()
+    }
 
 
 def test_spatial_join_df_layer_equals_broadcast_path(spark, points):
@@ -289,97 +395,6 @@ def test_spatial_join_df_layer_10k_features(spark, points, coords):
     assert got == want
 
 
-def test_knn_join_df_equals_list_path(spark, points):
-    """The DataFrame-native kNN (queries as a DataFrame, mapInPandas ring
-    cells, acceptance via joins) returns exactly the driver-list path's
-    rows — including a forced shuffle-join round (broadcast_cells=0) so
-    the at-scale plan is the one verified."""
-    from spatial4n_spark.operators import knn_join_df
-
-    queries = [("q_paris", 2.35, 48.85), ("q_dl", 179.9, -5.0), ("q_sparse", -120.0, -55.0)]
-    k = 7
-    want = {
-        (r["query_id"], r["image_id"], r["rank"])
-        for r in knn_join(points, queries, k=k, level=3).collect()
-    }
-    q_df = spark.createDataFrame(queries, "query_id string, qlon double, qlat double")
-    for bcast in (200_000, 0):
-        got = {
-            (r["query_id"], r["image_id"], r["rank"])
-            for r in knn_join_df(
-                points, q_df, k=k, level=3, broadcast_cells=bcast
-            ).collect()
-        }
-        assert got == want, f"broadcast_cells={bcast}"
-    # adaptive mode: per-query levels from the counts pyramid, same rows
-    got = {
-        (r["query_id"], r["image_id"], r["rank"])
-        for r in knn_join_df(points, q_df, k=k, level=None).collect()
-    }
-    assert got == want, "adaptive levels"
-
-
-def test_knn_join_cover_equals_ring_path(spark, points):
-    """The backend-portable cover-based kNN (expanding circle covers per
-    round, prefix-property coarse joins) returns exactly the ring path's
-    rows on BOTH cell backends — including pole and dateline queries,
-    which exercise the cover planner's piece splitting."""
-    from spatial4n_spark.operators.knn import knn_join_cover
-
-    queries = [
-        ("q_paris", 2.35, 48.85),
-        ("q_dl", 179.9, -5.0),
-        ("q_sparse", -120.0, -55.0),
-        ("q_pole", 10.0, 89.5),
-    ]
-    k = 7
-    want = {
-        (r["query_id"], r["image_id"], r["rank"])
-        for r in knn_join(points, queries, k=k, level=3).collect()
-    }
-    # h3 has no prefix hierarchy: the coarse join column is a re-encode
-    # at the cover level instead of an ancestor shift (_coarse_cell)
-    for index, level in (("s2", 12), ("geohash", 5), ("h3", 7)):
-        got = {
-            (r["query_id"], r["image_id"], r["rank"])
-            for r in knn_join_cover(
-                points, queries, k=k, index=index, level=level
-            ).collect()
-        }
-        assert got == want, index
-
-
-def test_knn_join_cover_df_equals_list_path(spark, points):
-    """The DataFrame-native cover kNN (covers planned DISTRIBUTED in a
-    mapInPandas stage, acceptance as aggregate + anti-join) returns
-    exactly the driver-list cover path's rows on both backends,
-    including pole and dateline queries."""
-    from spatial4n_spark.operators.knn import knn_join_cover, knn_join_cover_df
-
-    queries = [
-        ("q_paris", 2.35, 48.85),
-        ("q_dl", 179.9, -5.0),
-        ("q_sparse", -120.0, -55.0),
-        ("q_pole", 10.0, 89.5),
-    ]
-    k = 7
-    q_df = spark.createDataFrame(queries, "query_id string, qlon double, qlat double")
-    for index, level in (("s2", 12), ("geohash", 5), ("h3", 7)):
-        want = {
-            (r["query_id"], r["image_id"], r["rank"])
-            for r in knn_join_cover(
-                points, queries, k=k, index=index, level=level
-            ).collect()
-        }
-        got = {
-            (r["query_id"], r["image_id"], r["rank"])
-            for r in knn_join_cover_df(
-                points, q_df, k=k, index=index, level=level
-            ).collect()
-        }
-        assert got == want, index
-
-
 def test_tile_stats_salted_equals_plain(spark, points):
     plain = {r["cell"]: (r["n"], r["avg_lon"], r["avg_lat"]) for r in tile_stats(points, level=3).collect()}
     salted = {r["cell"]: (r["n"], r["avg_lon"], r["avg_lat"]) for r in tile_stats(points, level=3, salt_buckets=8).collect()}
@@ -475,61 +490,6 @@ def test_group_bbox_dateline_smart(spark):
     assert solo["min_x"] == solo["max_x"] == 42.5
 
 
-def test_knn_est_cells_anisotropic(spark):
-    """The broadcast-decision estimate must carry the cos(lat) lon-ring
-    growth the enumeration actually performs: a pole-adjacent query's
-    estimate is many times the equator estimate for the same rings, and
-    both upper-bound the rows _ring_cells_frame really emits."""
-    from spatial4n_spark.operators.knn import _est_cells_expr, _ring_cells_frame
-
-    level, rings = 4, 8
-    df = spark.createDataFrame(
-        [(0.0, rings, level), (89.5, rings, level)],
-        "_qlat double, _rings int, _level int",
-    )
-    eq, pole = [
-        r[0] for r in df.select(_est_cells_expr([level]).alias("c")).collect()
-    ]
-    assert pole > 20 * eq  # anisotropy reflected, not the isotropic square
-    for qlat, est in ((0.0, eq), (89.5, pole)):
-        n = len(_ring_cells_frame(np.array(["q"]), [10.0], [qlat], level, rings))
-        assert n <= est  # estimate stays an upper bound on enumerated rows
-
-
-def test_knn_covered_radius_expr_never_exceeds_enumeration(spark):
-    """Acceptance soundness across the cap boundary: the JVM per-row
-    covered-radius expression must never exceed the numpy twin computed
-    with the UNslacked rx (what the block really enumerated) — including
-    pole-adjacent rows where rings/cos lands at the full-wrap cap."""
-    from spatial4n_spark.operators.knn import (
-        _covered_radius_expr,
-        _covered_radius_km,
-    )
-
-    level = 3
-    rows = [
-        (qlat, rings)
-        for qlat in (0.0, 45.0, 75.0, 85.0, 88.0, 89.0, 89.9, -89.9)
-        for rings in (1, 2, 4, 8, 16, 64, 256)
-    ]
-    df = spark.createDataFrame(rows, "_qlat double, _rings int")
-    got = df.select(
-        "_qlat",
-        "_rings",
-        _covered_radius_expr(F.col("_qlat"), F.col("_rings"), level).alias("r"),
-    ).collect()
-    for r in got:
-        assert r["r"] <= _covered_radius_km(r["_qlat"], level, int(r["_rings"])) + 1e-9, (
-            r["_qlat"],
-            r["_rings"],
-        )
-    # pole queries must still reach a full-wrap (lat-band) radius once
-    # rings/cos clears the cap — a cap clause that can never fire would
-    # strand them at ~0 km and force every pole query to brute force
-    pole = [r["r"] for r in got if r["_qlat"] == 89.9 and r["_rings"] == 256]
-    assert pole and pole[0] > 1000.0
-
-
 def test_spatial_join_polygons_equals_matrix(spark):
     """The cover-cell polygon pair join returns exactly the crossJoin
     relate matrix's non-disjoint pairs, and its candidate set is a strict
@@ -615,24 +575,3 @@ def test_tile_pyramid_count_only_and_h3_rejected(spark, points):
         assert sum(r["n"] for r in pyr if r["lvl"] == L) == N
     with pytest.raises(ValueError, match="nest"):
         tile_pyramid(points, level=5, index="h3")
-
-
-def test_knn_join_routes_large_batches_to_df_plan(spark, points):
-    """Above df_threshold the list entry point must delegate to the
-    DF-native plan (no O(#queries) driver dict / isin literals) and
-    return the identical exact result — the round-5 unification of the
-    legacy list path."""
-    queries = [("q_paris", 2.35, 48.85), ("q_dl", 179.9, -5.0),
-               ("q_sparse", -120.0, -55.0), ("q_lon", -0.1, 51.5)]
-    k = 5
-    want = sorted(
-        map(tuple, knn_join(points, queries, k=k, level=3).collect())
-    )
-    # df_threshold=1 forces every call through knn_join_df
-    got = sorted(
-        map(
-            tuple,
-            knn_join(points, queries, k=k, df_threshold=1).collect(),
-        )
-    )
-    assert got == want

@@ -10,6 +10,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import time
@@ -26,27 +27,34 @@ TABLES = [
 ]
 
 
+def _host_mem_gb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     # big-sf oracle hardening: the heavy oracles (image DCT chains at
     # sf1) spill tens of GB — keep the spill off the repo directory and
-    # give the in-memory phase room (less spill to begin with).
-    # Overridable: ORACLE_DUCK_MEM / ORACLE_DUCK_TMP.
-    with __import__("contextlib").suppress(duckdb.Error, OSError):
-        tmp = os.environ.get("ORACLE_DUCK_TMP", "/tmp/duckdb_oracle_tmp")
-        os.makedirs(tmp, exist_ok=True)
-        con.execute(f"SET temp_directory='{tmp}'")
-        con.execute(
-            f"SET memory_limit='{os.environ.get('ORACLE_DUCK_MEM', '24GB')}'"
-        )
+    # give the in-memory phase room (less spill to begin with): half the
+    # host RAM by default. Overridable: ORACLE_DUCK_MEM / ORACLE_DUCK_TMP.
+    tmp = os.environ.get("ORACLE_DUCK_TMP", "/tmp/duckdb_oracle_tmp")
+    mem = os.environ.get("ORACLE_DUCK_MEM", f"{max(1, _host_mem_gb() // 2)}GB")
+    settings = [
+        f"SET temp_directory='{tmp}'",
+        f"SET memory_limit='{mem}'",
         # our compares are order-insensitive (canon() sorts), so DuckDB
         # need not buffer pipelines to preserve row order — a large
         # memory/spill reduction on the wide-intermediate oracles
-        con.execute("SET preserve_insertion_order=false")
-        if os.environ.get("ORACLE_DUCK_THREADS"):
-            con.execute(
-                f"SET threads={int(os.environ['ORACLE_DUCK_THREADS'])}"
-            )
+        "SET preserve_insertion_order=false",
+    ]
+    if os.environ.get("ORACLE_DUCK_THREADS"):
+        settings.append(f"SET threads={int(os.environ['ORACLE_DUCK_THREADS'])}")
+    with contextlib.suppress(OSError):
+        os.makedirs(tmp, exist_ok=True)
+    # each setting on its own: one that fails leaves the rest applied
+    for stmt in settings:
+        with contextlib.suppress(duckdb.Error):
+            con.execute(stmt)
     for t in TABLES:
         try:
             con.execute(
@@ -130,6 +138,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    # the DuckDB oracles mirror the pure JPEG decoder bit for bit
+    os.environ.setdefault("SPATIAL4N_JPEG_CODEC", "pure")
     # env knobs for big-sf sweeps: the sandbox parquet is single-row-group
     # (unsplittable), so without scan repartitioning a quadratic row like
     # emb_knn runs its whole cross join on 1-2 tasks at sf1.

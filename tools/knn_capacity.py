@@ -1,15 +1,14 @@
-"""Large-query-set kNN capacity smoke: 10^5 queries through the
-DataFrame-native path (operators.knn.knn_join_df), or — with
---layout clustered — through the manifest-pruned clustered layout
-(io.clustered.clustered_knn_df), evidencing that the storage path's
-kNN also keeps per-query state off the driver.
+"""Large-query-set kNN capacity smoke: a query DataFrame through the
+one kNN core (operators.knn.knn_join) over a points scan, or — with
+--layout clustered — over the manifest-pruned clustered layout.
 
-Evidence for VERDICT round-2 item 2: no per-query structure crosses the
-driver — query coords are generated distributed (spark.range ->
-mapInArrow), ring cells expand in a mapInPandas stage, acceptance is
-aggregate + anti-join. The Python driver's peak RSS is reported at each
-query-count level; a flat profile across a 10x query-count step is the
-"flat driver memory" claim.
+No per-query structure crosses the driver: query coords are generated
+distributed (spark.range -> mapInArrow), circle covers are planned in a
+mapInPandas stage, and acceptance is aggregate + anti-join. Above about
+3k pending queries the cover-size rule picks the shuffle join by itself.
+The Python driver's peak RSS is reported at each query-count level; a
+flat profile across a 10x query-count step is the "flat driver memory"
+claim.
 
 Usage: python tools/knn_capacity.py [--points 1000000] [--queries 10000,100000]
 Prints one JSON line.
@@ -62,7 +61,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from spatial4n_spark.operators.knn import knn_join_df
+    from spatial4n_spark.operators.knn import knn_join
     from spatial4n_spark.sources.images import images_df
 
     spark = (
@@ -90,22 +89,7 @@ def main() -> int:
     for nq in (int(x) for x in args.queries.split(",")):
         q = query_frame(spark, nq)
         t0 = time.time()
-        if args.layout == "clustered":
-            from spatial4n_spark.io.clustered import clustered_knn_df
-
-            out = clustered_knn_df(
-                spark, table, q, k=args.k, id_col="image_id",
-                broadcast_cells=0,  # force the at-scale shuffle-join plan
-            )
-        else:
-            out = knn_join_df(
-                points,
-                q,
-                k=args.k,
-                estimated_total=args.points,
-                broadcast_cells=0,  # force the at-scale shuffle-join plan
-                debug=bool(int(__import__("os").environ.get("KNN_DEBUG", "0"))),
-            )
+        out = knn_join(table or points, q, k=args.k)
         n_out = out.count()
         dt = time.time() - t0
         rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
@@ -122,9 +106,9 @@ def main() -> int:
         json.dumps(
             {
                 "bench": (
-                    "clustered_knn_df capacity (manifest-pruned, shuffle-join rounds)"
+                    "knn_join capacity over the clustered layout (manifest-pruned reads)"
                     if args.layout == "clustered"
-                    else "knn_join_df capacity (DataFrame-native, shuffle-join rounds)"
+                    else "knn_join capacity over a points scan"
                 ),
                 "layout": args.layout,
                 "points": args.points,

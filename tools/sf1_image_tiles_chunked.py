@@ -55,6 +55,8 @@ def main() -> int:
     from spatial4n_spark import oracles_images as OI
     from tools.check_oracle import compare, duck_con
 
+    # the DuckDB oracle mirrors the pure JPEG decoder bit for bit
+    os.environ.setdefault("SPATIAL4N_JPEG_CODEC", "pure")
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("sf1-image-tiles-chunked")
